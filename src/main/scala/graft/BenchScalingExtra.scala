@@ -3,7 +3,12 @@ package graft
 import graft.core.Tier
 import graft.operators.Rollup
 import graft.sources.TokenTable
+import java.nio.file.Files
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Scaling-gate diagnostic (NOT the driver contract — that is [[Bench]],
  * frozen): measures the fused 1m rollup at local[N] vs local[4N] over TWO
@@ -21,8 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * based; this main only attributes the cost.
  *
  * Env: SPARK_GRAFT_BENCH_DOCS (default 4,000,000 → 1.024B points),
- * SPARK_GRAFT_SCALE_REPS (default 3). Prints one summary line per input
- * kind; appends nothing to BENCH.md (rows there stay Bench-authored).
+ * SPARK_GRAFT_SCALE_REPS (default 3). The materialized points (~4 GB of
+ * parquet at the default size) go to a fresh temp directory that is
+ * deleted when the run ends. Prints one summary line per input kind;
+ * appends nothing to BENCH.md (rows there stay Bench-authored).
  */
 object BenchScalingExtra {
 
@@ -42,47 +49,79 @@ object BenchScalingExtra {
 
   private def consumeAll(df: DataFrame): Long = BenchActions.consumeAll(df)
 
+  /** Sums task CPU time from TaskEnd events. [[settledCpuNs]] waits for
+   * a marker job's JobEnd instead of sleeping: the listener bus delivers
+   * events in order, so once that JobEnd is in, every TaskEnd posted
+   * before it has been counted. */
+  private final class CpuListener extends SparkListener {
+    private var cpuNs = 0L
+    private val ended = mutable.HashSet.empty[Int]
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (e.taskMetrics != null) cpuNs += e.taskMetrics.executorCpuTime
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      ended += e.jobId
+      notifyAll()
+    }
+
+    /** Task CPU nanoseconds of every task that ended before this call. */
+    def settledCpuNs(sc: SparkContext): Long = {
+      val marker = sc.parallelize(Seq(1), 1).countAsync()
+      marker.get()
+      val id = marker.jobIds.head
+      synchronized {
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!ended(id) && System.nanoTime() < deadline) wait(1000)
+        if (!ended(id)) throw new IllegalStateException("listener barrier not reached in 60 s")
+        cpuNs
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val docs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "4000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt
+    val tmp = Files.createTempDirectory("graft_scaling_points_")
+    try measure(docs, reps, tmp.resolve("points").toString)
+    finally {
+      val walk = Files.walk(tmp)
+      try walk.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.deleteIfExists)
+      finally walk.close()
+    }
+  }
+
+  private def measure(docs: Long, reps: Int, dir: String): Unit = {
     val tokens = 256
     val pts = docs * tokens
-    val dir = s"/tmp/graft_scaling_points_${docs}"
-
     // materialize once (untimed): identical rows to the generator
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
-      val s = session(16)
-      TokenTable
-        .rangePoints(s, docs, tokens, partitions = 256)
-        .write
-        .mode("overwrite")
-        .parquet(dir)
-      s.stop()
-    }
+    val w = session(16)
+    TokenTable
+      .rangePoints(w, docs, tokens, partitions = 256)
+      .write
+      .parquet(dir)
+    w.stop()
 
+    // wall and CPU of the same repetition: the one with the lowest wall
     final case class Level(wall: Double, cpu: Double)
+    def faster(a: Level, b: Level): Level = if (b.wall < a.wall) b else a
     def level(cores: Int, input: SparkSession => DataFrame): Level = {
       val s = session(cores)
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) cpuNs.addAndGet(te.taskMetrics.executorCpuTime)
-      })
+      val cpu = new CpuListener
+      s.sparkContext.addSparkListener(cpu)
       // warmup / JIT on a small slice
       consumeAll(Rollup.rollupFromPoints(TokenTable.rangePoints(s, 50000, tokens, 64), Tier.OneMinute))
-      var bestWall = Double.MaxValue
-      var bestCpu = Double.MaxValue
+      var best = Level(Double.MaxValue, Double.MaxValue)
       for (_ <- 1 to reps) {
-        val c0 = cpuNs.get
+        val c0 = cpu.settledCpuNs(s.sparkContext)
         val t0 = System.nanoTime()
         consumeAll(Rollup.rollupFromPoints(input(s), Tier.OneMinute))
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        bestWall = math.min(bestWall, sec)
-        bestCpu = math.min(bestCpu, (cpuNs.get - c0) / 1e9)
+        best = faster(best, Level(sec, (cpu.settledCpuNs(s.sparkContext) - c0) / 1e9))
       }
       s.stop()
-      Level(bestWall, bestCpu)
+      best
     }
 
     val kinds: Seq[(String, SparkSession => DataFrame)] = Seq(
@@ -93,10 +132,8 @@ object BenchScalingExtra {
       var n = Level(Double.MaxValue, Double.MaxValue)
       var n4 = Level(Double.MaxValue, Double.MaxValue)
       for (_ <- 1 to 2) {
-        val a = level(4, input)
-        n = Level(math.min(n.wall, a.wall), math.min(n.cpu, a.cpu))
-        val b = level(16, input)
-        n4 = Level(math.min(n4.wall, b.wall), math.min(n4.cpu, b.cpu))
+        n = faster(n, level(4, input))
+        n4 = faster(n4, level(16, input))
       }
       val eff = (pts / n4.wall) / (4.0 * (pts / n.wall))
       println(

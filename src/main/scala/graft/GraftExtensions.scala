@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSessionExtensions
  * }}}
  *
  * injects every graft Catalyst function (codecs, preconditioning, simhash,
- * vector kernels, tier_stats) into each new SparkSession via the public
+ * vector and array kernels, the fused tier_stats_decl aggregate) into
+ * each new SparkSession via the public
  * `SparkSessionExtensions.injectFunction` API — SQL and `call_function`
  * resolve them with no imperative registration (SURVEY.md §2.11). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -18,12 +18,12 @@ object GraftFunctions {
     "chimp_encode" -> (args => ChimpEncode(args.head)),
     "chimp_decode" -> (args => ChimpDecode(args.head)),
     "simhash64" -> (args => SimHash64(args.head)),
-    // fused single-buffer tier aggregate (TypedImperativeAggregate); the
-    // analyzer wraps the bare AggregateFunction into an AggregateExpression
-    "tier_stats" -> (args => TierStats(args.head)),
-    // codegen DeclarativeAggregate twin of tier_stats (same 128-bit-exact
-    // sum of squares; plain-expression update/merge in the hash-agg loop)
+    // fused single-buffer tier aggregate (codegen DeclarativeAggregate,
+    // 128-bit-exact sum of squares); the analyzer wraps the bare
+    // AggregateFunction into an AggregateExpression. `tier_stats` is the
+    // same aggregate under its original name, which Bench still calls.
     "tier_stats_decl" -> (args => TierStatsDecl(args.head)),
+    "tier_stats" -> (args => TierStatsDecl(args.head)),
     // bounded-state k-minimum-values sketch (TypedImperativeAggregate)
     "kmv_kmin" -> (args => KmvKMin(args.head, foldInt(args(1)))),
     "dot_q" -> (args => DotQ(args.head, args(1))),
@@ -52,25 +52,11 @@ object GraftFunctions {
     "arr_pos_weighted_sum" -> (args => ArrPosWeightedSum(args.head, foldLong(args(1)))),
     "arr_pos_weighted_sum_q" -> (args =>
       ArrPosWeightedSumQ(args.head, foldLong(args(1)), foldLong(args(2)))),
-    "arr_abs_sum" -> (args => ArrAbsSum(args.head)),
     "arr_abs_sum_q" -> (args => ArrAbsSumQ(args.head, foldLong(args(1)))),
-    "arr_abs_err_q_sum" -> (args =>
-      ArrErrQSum(args.head, args(1), foldLong(args(2)), squared = false)),
-    "arr_sq_err_q_sum" -> (args =>
-      ArrErrQSum(args.head, args(1), foldLong(args(2)), squared = true)),
+    "arr_sq_err_q_sum" -> (args => ArrErrQSum(args.head, args(1), foldLong(args(2)))),
     "arr_seasonal_abs_sum" -> (args => ArrSeasonalAbsSum(args.head, foldInt(args(1)))),
     "arr_interval_penalty_sum" -> (args =>
       ArrIntervalPenaltySum(args.head, args(1), args(2), foldLong(args(3)))),
-    // ranged twins: evaluate over arr[start, start+len) in place (no
-    // slice materialization in the rolling-window hot path)
-    "arr_sum_range" -> (args => ArrSumRange(args.head, args(1), args(2))),
-    "arr_abs_sum_range" -> (args => ArrAbsSumRange(args.head, args(1), args(2))),
-    "arr_seasonal_abs_sum_range" -> (args =>
-      ArrSeasonalAbsSumRange(args.head, args(1), args(2), foldInt(args(3)))),
-    "arr_abs_err_q_sum_range" -> (args =>
-      ArrErrQSumRange(args.head, args(1), args(2), args(3), foldLong(args(4)), squared = false)),
-    "arr_sq_err_q_sum_range" -> (args =>
-      ArrErrQSumRange(args.head, args(1), args(2), args(3), foldLong(args(4)), squared = true)),
     // eval_window_stats(tokens, m, ctx, hor, stride, scale): fused window
     // enumeration + packed reductions, one compact struct per window
     "window_slices" -> (args =>

@@ -1,147 +1,32 @@
 package graft.functions.expressions
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
-/** Mutable single-pass buffer for one tier group. The sum of squares is a
- * 128-bit unsigned accumulator (hi/lo), so the statistic stays EXACT at
- * any group size — a Long would wrap at ~3.6e9 points per group (tok^2 <
- * 2.53e9), which a 10^12-sequence table exceeds. */
-final class TierStatsBuffer(
-    var min: Int = Int.MaxValue,
-    var max: Int = Int.MinValue,
-    var sum: Long = 0L,
-    var cnt: Long = 0L,
-    var sqHi: Long = 0L,
-    var sqLo: Long = 0L)
-
 /**
- * `tier_stats(tok)` — fused single-buffer tier aggregate computing
- * (min, max, sum, count, sum-of-squares) in ONE pass with ONE buffer,
- * returned as a struct. The UDAF alternative to five separate built-in
- * aggregate buffers in the rollup ladder (SURVEY.md §4 custom item 2);
- * semantic ancestor: the reference's PackedStdScaler single kernel
- * computing mean + variance per (sample_id, variate_id) group
- * (uni2ts/src/uni2ts/module/packed_scaler.py:78-122).
+ * `tier_stats_decl(tok)` (also registered as `tier_stats`) — fused tier
+ * aggregate computing (min, max, sum, count, sum of squares) in ONE pass
+ * with ONE buffer, returned as a struct. It replaces five separate
+ * built-in aggregate buffers in the rollup ladder (SURVEY.md §4 custom
+ * item 2); semantic ancestor: the reference's PackedStdScaler single
+ * kernel computing mean + variance per (sample_id, variate_id) group
+ * (uni2ts/src/uni2ts/module/packed_scaler.py:78-122). Variance is derived
+ * downstream as (sumsq - sum^2/cnt) / (cnt - 1), exactly as for the
+ * built-in path.
  *
- * Variance is derived downstream as
- * (sumsq - sum^2/cnt) / (cnt - 1), exactly as for the built-in path.
- */
-case class TierStats(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TierStatsBuffer]
-    with UnaryLike[Expression] {
-
-  override def prettyName: String = "tier_stats"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case IntegerType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires INT, got $t")
-    }
-
-  override def dataType: DataType = StructType(
-    Seq(
-      StructField("min_tok", IntegerType, nullable = false),
-      StructField("max_tok", IntegerType, nullable = false),
-      StructField("sum_tok", LongType, nullable = false),
-      StructField("cnt_tok", LongType, nullable = false),
-      StructField("sumsq_tok", DecimalType(38, 0), nullable = false)))
-
-  override def createAggregationBuffer(): TierStatsBuffer = new TierStatsBuffer()
-
-  /** 128-bit unsigned add of a non-negative long into (sqHi, sqLo). */
-  private def addSq(b: TierStatsBuffer, v: Long): Unit = {
-    val lo = b.sqLo
-    val nl = lo + v
-    if (java.lang.Long.compareUnsigned(nl, lo) < 0) b.sqHi += 1L
-    b.sqLo = nl
-  }
-
-  override def update(b: TierStatsBuffer, input: InternalRow): TierStatsBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val x = v.asInstanceOf[Int]
-      if (x < b.min) b.min = x
-      if (x > b.max) b.max = x
-      b.sum += x
-      b.cnt += 1L
-      addSq(b, x.toLong * x)
-    }
-    b
-  }
-
-  override def merge(b: TierStatsBuffer, o: TierStatsBuffer): TierStatsBuffer = {
-    if (o.min < b.min) b.min = o.min
-    if (o.max > b.max) b.max = o.max
-    b.sum += o.sum
-    b.cnt += o.cnt
-    val lo = b.sqLo
-    val nl = lo + o.sqLo
-    if (java.lang.Long.compareUnsigned(nl, lo) < 0) b.sqHi += 1L
-    b.sqLo = nl
-    b.sqHi += o.sqHi
-    b
-  }
-
-  override def eval(b: TierStatsBuffer): Any =
-    if (b.cnt == 0L) null
-    else {
-      val bi = java.math.BigInteger
-        .valueOf(b.sqHi)
-        .shiftLeft(64)
-        .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(b.sqLo)))
-      new GenericInternalRow(
-        Array[Any](b.min, b.max, b.sum, b.cnt, Decimal(BigDecimal(bi), 38, 0)))
-    }
-
-  override def serialize(b: TierStatsBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(40)
-    bb.putInt(b.min).putInt(b.max).putLong(b.sum).putLong(b.cnt)
-    bb.putLong(b.sqHi).putLong(b.sqLo)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TierStatsBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    new TierStatsBuffer(bb.getInt, bb.getInt, bb.getLong, bb.getLong, bb.getLong, bb.getLong)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TierStats =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TierStats =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): TierStats =
-    copy(child = newChild)
-}
-
-/**
- * `tier_stats_decl(tok)` — the codegen twin of [[TierStats]]: the same
- * fused (min, max, sum, count, 128-bit-exact sum of squares) aggregate
- * as a DeclarativeAggregate, so the update/merge paths are PLAIN
+ * A DeclarativeAggregate, so the update/merge paths are PLAIN
  * EXPRESSIONS that whole-stage codegen compiles into the HashAggregate
- * loop instead of interpreted per-row `eval` calls through the
- * ObjectHashAggregate path. Round-7 measurement (after the bench
- * protocol fix — the old "parity" reading was a count()-pruning
- * artifact that never executed either variant): the imperative form is
- * ~5x slower than the built-in aggregates on the 1B-point rollup; this
- * form exists so the unbounded-group exactness does not cost that.
+ * loop (no interpreted per-row eval on the ObjectHashAggregate path).
  *
- * The 128-bit accumulator is two longs with the carry computed by the
- * classic bitwise unsigned-overflow identity
- * `carry = ((a & b) | ((a | b) & ~(a + b))) >>> 63` — pure integer
- * expressions, codegen-able, exact. The Decimal(38,0) result is
- * hi * 2^64 + unsigned(lo), matching [[TierStats.eval]] bit-for-bit.
+ * The sum of squares is a 128-bit unsigned accumulator, so the statistic
+ * stays EXACT at any group size — a Long would wrap at ~3.6e9 points per
+ * group (tok^2 < 2.53e9), which a 10^12-sequence table exceeds. It is two
+ * longs with the carry computed by the classic bitwise unsigned-overflow
+ * identity `carry = ((a & b) | ((a | b) & ~(a + b))) >>> 63` — pure
+ * integer expressions, codegen-able, exact. The Decimal(38,0) result is
+ * hi * 2^64 + unsigned(lo); an all-null group yields a null struct.
  */
 case class TierStatsDecl(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
@@ -193,8 +78,7 @@ case class TierStatsDecl(child: Expression)
 
   // the 128-bit low word MUST wrap (two's-complement add with the carry
   // recovered separately) — LEGACY eval mode, not the session's ANSI
-  // default, which would raise ARITHMETIC_OVERFLOW on the intended wrap;
-  // matches TierStatsBuffer's plain JVM `+=`
+  // default, which would raise ARITHMETIC_OVERFLOW on the intended wrap
   private def addWrap(a: Expression, b: Expression): Expression =
     Add(a, b, EvalMode.LEGACY)
 

@@ -47,11 +47,8 @@ object Rollup {
    * extreme 10^12-doc tail) use
    * [[graft.functions.expressions.TierStatsDecl]] (`tier_stats_decl`) —
    * 128-bit-exact sum of squares at measured parity with the built-in
-   * aggregates (codegen DeclarativeAggregate). The TypedImperativeAggregate
-   * form ([[graft.functions.expressions.TierStats]]) computes the same
-   * values but pays ~2-4x for interpreted per-row eval on the
-   * ObjectHashAggregate path — its earlier "parity" reading was a
-   * count()-pruning measurement artifact (BENCH.md protocol change). */
+   * aggregates (codegen DeclarativeAggregate) — directly, without the
+   * LONG cast below. */
   def rollupFromPoints(points: DataFrame, tier: String): DataFrame = {
     val w = Tier.widths(tier)
     // ONE fused aggregate buffer (tier_stats_decl, codegen

@@ -100,9 +100,9 @@ object TokenRollupQueries {
       Rollup.mergeLate(onTime1h, pts.filter(lateCond), Tier.OneHour)
     }),
 
-    // Fused single-buffer tier aggregate (TierStats TypedImperativeAggregate,
-    // SURVEY.md §4 custom item 2): one buffer computes min/max/sum/count and
-    // a 128-bit-exact sum of squares per (source, bucket) — the unbounded-
+    // Fused single-buffer tier aggregate (tier_stats_decl, SURVEY.md §4
+    // custom item 2): one buffer computes min/max/sum/count and a
+    // 128-bit-exact sum of squares per (source, bucket) — the unbounded-
     // group-size path for the variance statistic.
     "q_rollup_stats" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
@@ -111,7 +111,7 @@ object TokenRollupQueries {
         .groupBy(
           col("source"),
           expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"))
-        .agg(call_function("tier_stats", col("tok")).as("st"))
+        .agg(call_function("tier_stats_decl", col("tok")).as("st"))
         .select(
           col("source"),
           col("bucket"),
@@ -119,7 +119,7 @@ object TokenRollupQueries {
           col("st.max_tok").as("max_tok"),
           col("st.sum_tok").as("sum_tok"),
           col("st.cnt_tok").as("cnt_tok"),
-          // The UDAF's 128-bit-exact DECIMAL(38,0) accumulator stays
+          // The aggregate's 128-bit-exact DECIMAL(38,0) accumulator stays
           // internal; the emitted column is BIGINT (fits by orders of
           // magnitude at oracle scale, and hashes identically on both
           // engines — DECIMAL output was the round-2 hash-gate failure).

@@ -31,7 +31,6 @@ class ArrayKernelSpec extends AnyFunSuite {
       val a = data(v)
       val present = v.flatten.map(_.toLong)
       ArrayKernels.sumLong(a, isInt = true) == present.sum &&
-      ArrayKernels.absSum(a, isInt = true) == present.map(math.abs).sum &&
       ArrayKernels.nullCount(a) == v.count(_.isEmpty) &&
       ArrayKernels.firstDataPos(a) == (v.indexWhere(_.isDefined) match {
         case -1 => 0L
@@ -91,9 +90,7 @@ class ArrayKernelSpec extends AnyFunSuite {
     } yield (v, center, m, lo, hi)
     check(Prop.forAll(gen) { case (v, center, m, lo, hi) =>
       val a = new GenericArrayData(v.map(Int.box).toArray[Any])
-      ArrayKernels.errQSum(a, isInt = true, center, 10000L, squared = false) ==
-        v.map(x => math.floor(math.abs(x - center) * 10000 + 0.5).toLong).sum &&
-      ArrayKernels.errQSum(a, isInt = true, center, 10000L, squared = true) ==
+      ArrayKernels.errQSum(a, isInt = true, center, 10000L) ==
         v.map { x => val d = x - center; math.floor(d * d * 10000 + 0.5).toLong }.sum &&
       ArrayKernels.seasonalAbsSum(a, isInt = true, m) ==
         (m until v.size).map(t => math.abs(v(t).toLong - v(t - m))).sum &&

@@ -3,6 +3,7 @@ package graft
 import graft.core.{PatchSizing, Tier}
 import graft.operators.{Downsample, Validity}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Round-2 operator extras: public extension registration, patch-size
  * constraint resolution, validity counters, chunked LTTB equivalence. */
@@ -21,6 +22,40 @@ class OperatorExtrasSpec extends SparkSpec {
       .collect()(0)
     assert(row.getDouble(0) == 2.25)
     assert(row.getLong(1) == 1000L * 3000L + 2000L * 4000L)
+  }
+
+  test("registry reachability: every graft function has a call site outside graft/functions") {
+    // A registered kernel that only tests reach is dead weight: each name
+    // must be called from engine code (queries, jobs, streaming ops, the
+    // bench mains) as a "name" literal or as name( in SQL/expression text.
+    graft.functions.GraftFunctions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = registry
+      .listFunction()
+      .flatMap(registry.lookupFunction)
+      .filter(_.getClassName == "graft.functions.expressions")
+      .map(_.getName)
+      .distinct
+      .sorted
+    assert(names.nonEmpty, "no graft functions registered in the session")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"source root not found: ${root.toAbsolutePath}")
+    val own = root.resolve("graft/functions")
+    val files = java.nio.file.Files.walk(root)
+    val code =
+      try files
+          .iterator()
+          .asScala
+          .filter(p => p.toString.endsWith(".scala") && !p.startsWith(own))
+          .map(p => stripComments(java.nio.file.Files.readString(p)))
+          .mkString("\n")
+      finally files.close()
+    val unreached = names.filterNot { n =>
+      code.contains("\"" + n + "\"") ||
+      ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(n) + "\\(").r.findFirstIn(code).isDefined
+    }
+    assert(unreached.isEmpty,
+      s"registered but never called outside graft/functions: ${unreached.mkString(", ")}")
   }
 
   test("patch-size resolution: reference DEFAULT_RANGES semantics") {
@@ -458,28 +493,38 @@ class OperatorExtrasSpec extends SparkSpec {
     val rnd = new scala.util.Random(3)
     // group "a": random values (negatives included); group "b": six
     // Int.MaxValue rows — sumsq = 6 * (2^31-1)^2 ≈ 2.77e19 > 2^64, so the
-    // unsigned-overflow carry MUST fire for the declarative form to agree
-    val rows =
-      Seq.fill(4000)(("a", rnd.nextInt())) ++
-        Seq.fill(6)(("b", Int.MaxValue)) ++
-        Seq(("c", 0)) // single zero: min=max=sum=sumsq=0
-    def agg(fn: String) = rows
+    // unsigned-overflow carry MUST fire; group "c": a single zero
+    // (min=max=sum=sumsq=0); group "d": nulls only, so no row counts and
+    // the struct itself must be null (the cnt = 0 branch)
+    val rows: Seq[(String, Option[Int])] =
+      Seq.fill(4000)(("a", Some(rnd.nextInt()))) ++
+        Seq.fill(6)(("b", Some(Int.MaxValue))) ++
+        Seq(("c", Some(0))) ++
+        Seq.fill(3)(("d", None))
+    // independent plain-Scala fold: (min, max, sum, count, BigInt sumsq)
+    val want: Map[String, Option[Seq[Any]]] = rows.groupBy(_._1).map { case (k, g) =>
+      val v = g.flatMap(_._2)
+      k -> Option.when(v.nonEmpty)(
+        Seq(v.min, v.max, v.map(_.toLong).sum, v.size.toLong, v.map(x => BigInt(x) * x).sum))
+    }
+    def agg(fn: String, nPart: Int): Map[String, Option[Seq[Any]]] = rows
       .toDF("k", "tok")
-      .repartition(7)
+      .repartition(nPart)
       .groupBy("k")
       .agg(call_function(fn, col("tok")).as("st"))
-      .select(col("k"), col("st.min_tok"), col("st.max_tok"), col("st.sum_tok"),
-        col("st.cnt_tok"), col("st.sumsq_tok"))
       .collect()
-      .map(r => r.getString(0) -> r.toSeq.tail)
+      .map { r =>
+        r.getString(0) -> Option(r.getStruct(1)).map(st =>
+          Seq(st.getInt(0), st.getInt(1), st.getLong(2), st.getLong(3),
+            BigInt(st.getDecimal(4).toBigIntegerExact)))
+      }
       .toMap
-    val imp = agg("tier_stats")
-    val dec = agg("tier_stats_decl")
-    assert(dec == imp, s"decl vs imperative mismatch:\n$dec\n$imp")
-    // and both match the independent BigInt reference on the carry group
-    val want = BigInt(Int.MaxValue.toLong) * Int.MaxValue * 6
-    assert(BigDecimal(imp("b")(4).asInstanceOf[java.math.BigDecimal]) == BigDecimal(want))
-    assert(want > (BigInt(1) << 64), "test must actually exceed 2^64")
+    for (nPart <- Seq(1, 7)) {
+      val got = agg("tier_stats_decl", nPart)
+      assert(got == want, s"tier_stats_decl vs Scala fold at repartition($nPart):\n$got\n$want")
+      assert(agg("tier_stats", nPart) == got, s"tier_stats != tier_stats_decl at repartition($nPart)")
+    }
+    assert(want("b").get(4).asInstanceOf[BigInt] > (BigInt(1) << 64), "test must actually exceed 2^64")
   }
 
   test("kmv_kmin: k smallest distinct values, stable across partitionings") {
@@ -732,4 +777,13 @@ class OperatorExtrasSpec extends SparkSpec {
       .toSet
     assert(got == Set((0, 60, true, false), (3, 60, false, true)), got)
   }
+
+  /** Scala source with `//` and `/* */` comments removed. String and
+   * character literals are matched too and kept verbatim, so a `//`
+   * inside a string is not taken for a comment (the leftmost match wins). */
+  private val literalOrComment =
+    """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*.*?\*/""".r
+  private def stripComments(src: String): String =
+    literalOrComment.replaceAllIn(src, m =>
+      if (m.matched.startsWith("/")) "" else scala.util.matching.Regex.quoteReplacement(m.matched))
 }

@@ -15,12 +15,16 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
-  /** Plan minus the intentional fan-out-balancing repartition lines
-   * (TokenTable.points/raw shuffle the tiny pre-explode doc rows to full
-   * parallelism, tagged REPARTITION_BY_NUM) — the assertions below count
-   * only the requirement-driven exchanges each operator itself adds. */
+  /** The fan-out-balancing shuffle: TokenTable.points hashes the tiny
+   * pre-explode doc rows on their doc id column `d` (REPARTITION_BY_NUM). */
+  private val balancingShuffle =
+    """Exchange hashpartitioning\(d#\d+L?, \d+\), REPARTITION_BY_NUM""".r
+
+  /** Plan minus the intentional fan-out-balancing shuffle — the assertions
+   * below count only the exchanges each operator itself adds. Any other
+   * repartition (a stray `repartition(n, col)`) still counts. */
   private def opsOnly(plan: String): String =
-    plan.linesIterator.filterNot(_.contains("REPARTITION_BY_NUM")).mkString("\n")
+    plan.linesIterator.filterNot(balancingShuffle.findFirstIn(_).isDefined).mkString("\n")
 
   test("rollup plan: column pruning reaches the scan; partial aggregation before shuffle") {
     val df = Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
@@ -40,6 +44,15 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("ObjectHashAggregate"), plan)
     // exactly ONE shuffle in the whole rollup (minus fan-out balancing)
     assert("Exchange".r.findAllIn(opsOnly(plan)).size == 1, s"expected 1 exchange:\n$plan")
+  }
+
+  test("opsOnly drops only the fan-out-balancing shuffle; a stray repartition still counts") {
+    val pts = TokenTable.points(spark, sf("sf0.001"), balanceFanout = true)
+    val balanced = planOf(Rollup.rollupFromPoints(pts, Tier.OneMinute))
+    assert(balancingShuffle.findAllIn(balanced).size == 1, balanced)
+    assert("Exchange".r.findAllIn(opsOnly(balanced)).size == 1, s"expected 1 exchange:\n$balanced")
+    val stray = planOf(Rollup.rollupFromPoints(pts.repartition(3, col("pos")), Tier.OneMinute))
+    assert("Exchange".r.findAllIn(opsOnly(stray)).size == 2, s"expected 2 exchanges:\n$stray")
   }
 
   test("filter on n_tok is pushed down to the documents scan") {
@@ -174,20 +187,24 @@ class PlanSpec extends SparkSpec {
         "arr_pos_weighted_sum(a, 0) = aggregate(zip_with(a, sequence(0L, size(a) - 1), (x, i) -> CAST(x AS BIGINT) * i), 0L, (acc, y) -> acc + y) AS c3",
         "arr_pos_weighted_sum_q(v, 100, 1) = aggregate(zip_with(v, sequence(1L, size(v)), (x, i) -> i * CAST(floor(x * 100 + 0.5) AS BIGINT)), 0L, (acc, y) -> acc + y) AS c4",
         "arr_every_kth(a, 3) = filter(a, (x, i) -> i % 3 = 0) AS c5",
-        "arr_abs_sum(a) = aggregate(a, 0L, (acc, x) -> acc + abs(x)) AS m1",
-        "arr_abs_err_q_sum(a, CAST(3.7 AS DOUBLE), 10000) = aggregate(a, 0L, (acc, x) -> acc + CAST(floor(abs(CAST(x AS DOUBLE) - 3.7) * 10000 + 0.5) AS BIGINT)) AS m2",
         "arr_sq_err_q_sum(a, CAST(3.7 AS DOUBLE), 10000) = aggregate(a, 0L, (acc, x) -> acc + CAST(floor((CAST(x AS DOUBLE) - 3.7) * (CAST(x AS DOUBLE) - 3.7) * 10000 + 0.5) AS BIGINT)) AS m3",
         "arr_seasonal_abs_sum(a, 7) = aggregate(sequence(7, size(a) - 1), 0L, (acc, t) -> acc + abs(CAST(element_at(a, t + 1) AS BIGINT) - element_at(a, t - 6))) AS m4",
         "arr_interval_penalty_sum(a, 5, 30, 40) = aggregate(a, 0L, (acc, y) -> acc + (30 - 5) + CASE WHEN y < 5 THEN 40L * (5 - y) ELSE 0L END + CASE WHEN y > 30 THEN 40L * (y - 30) ELSE 0L END) AS m5",
-        // ranged twins == full kernels over the equivalent slice (slice()
-        // is 1-based; the ranged start is 0-based)
-        "arr_sum_range(a, 2, 5) = arr_sum(slice(a, 3, 5)) AS r1",
-        "arr_abs_sum_range(a, 2, 5) = arr_abs_sum(slice(a, 3, 5)) AS r2",
-        "arr_abs_err_q_sum_range(a, 2, 5, CAST(3.7 AS DOUBLE), 10000) = arr_abs_err_q_sum(slice(a, 3, 5), CAST(3.7 AS DOUBLE), 10000) AS r3",
-        "arr_sq_err_q_sum_range(a, 2, 5, CAST(3.7 AS DOUBLE), 10000) = arr_sq_err_q_sum(slice(a, 3, 5), CAST(3.7 AS DOUBLE), 10000) AS r4",
-        "arr_seasonal_abs_sum_range(a, 2, 12, 3) = arr_seasonal_abs_sum(slice(a, 3, 12), 3) AS r5",
-        // the fused generator's per-window stats == the slice formulation
-        "aggregate(transform(eval_window_stats(a, 3, 8, 4, 4, 10000), st -> CAST(st.ctx_sum = arr_sum_range(a, st.fs - 8, 8) AND st.ctx_sumsq = arr_sq_err_q_sum_range(a, st.fs - 8, 8, CAST(0.0 AS DOUBLE), 1) AND st.ctx_min = CAST(array_min(slice(a, st.fs - 7, 8)) AS BIGINT) AND st.ctx_max = CAST(array_max(slice(a, st.fs - 7, 8)) AS BIGINT) AND st.hor_sum = arr_sum_range(a, st.fs, 4) AND st.habs = arr_abs_sum_range(a, st.fs, 4) AND st.sum_eq = arr_abs_err_q_sum_range(a, st.fs, 4, CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) AND st.sum_e2q = arr_sq_err_q_sum_range(a, st.fs, 4, CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) AND st.se_num = arr_seasonal_abs_sum_range(a, st.fs - 8, 8, 3) AS INT)), 0L, (acc, x) -> acc + x) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r6",
+        // the fused generator's per-window stats == the slice() formulation
+        // (context = the 8 elements before fs, horizon = the 4 from fs;
+        // slice() is 1-based, fs is 0-based)
+        "aggregate(transform(eval_window_stats(a, 3, 8, 4, 4, 10000), st -> CAST(" +
+          "st.ctx_sum = arr_sum(slice(a, st.fs - 7, 8)) AND " +
+          "st.ctx_sumsq = arr_sq_err_q_sum(slice(a, st.fs - 7, 8), CAST(0.0 AS DOUBLE), 1) AND " +
+          "st.ctx_min = CAST(array_min(slice(a, st.fs - 7, 8)) AS BIGINT) AND " +
+          "st.ctx_max = CAST(array_max(slice(a, st.fs - 7, 8)) AS BIGINT) AND " +
+          "st.hor_sum = arr_sum(slice(a, st.fs + 1, 4)) AND " +
+          "st.habs = aggregate(slice(a, st.fs + 1, 4), 0L, (acc, x) -> acc + abs(x)) AND " +
+          "st.sum_eq = aggregate(slice(a, st.fs + 1, 4), 0L, (acc, x) -> acc + " +
+          "CAST(floor(abs(CAST(x AS DOUBLE) - CAST(st.ctx_sum AS DOUBLE) / 8.0) * 10000 + 0.5) AS BIGINT)) AND " +
+          "st.sum_e2q = arr_sq_err_q_sum(slice(a, st.fs + 1, 4), CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) AND " +
+          "st.se_num = arr_seasonal_abs_sum(slice(a, st.fs - 7, 8), 3) AS INT)), 0L, (acc, x) -> acc + x) = " +
+          "size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r6",
         // the slice generator's windows == the slice() formulation
         "aggregate(transform(window_slices(a, 8, 4, 4), ws -> CAST(ws.ctx = slice(a, ws.fs - 7, 8) AND ws.hor = slice(a, ws.fs + 1, 4) AND ws.fs = 8 + ws.w * 4 AS INT)), 0L, (acc, x) -> acc + x) = size(window_slices(a, 8, 4, 4)) AS r7",
         "size(window_slices(a, 8, 4, 4)) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r8",
@@ -199,8 +216,7 @@ class PlanSpec extends SparkSpec {
         "arr_null_count(a) = size(filter(a, x -> x IS NULL)) AS c8",
         "arr_first_data_pos(a) = CAST(array_position(transform(a, x -> x IS NOT NULL), true) AS BIGINT) AS c9")
       .where("NOT (c1 AND c2 AND c3 AND c4 AND c5 AND c6 AND c7 AND c8 AND c9 " +
-        "AND m1 AND m2 AND m3 AND m4 AND m5 AND r1 AND r2 AND r3 AND r4 AND r5 " +
-        "AND r6 AND r7 AND r8 AND r9 AND r10)")
+        "AND m3 AND m4 AND m5 AND r6 AND r7 AND r8 AND r9 AND r10)")
       .count()
     assert(wrong == 0, "array kernel disagrees with its HOF-SQL formulation")
     // null-handling twins: sums skip nulls, counts/positions see them
